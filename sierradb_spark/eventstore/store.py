@@ -65,6 +65,9 @@ from dataclasses import dataclass
 from typing import Callable, Iterator, Literal, Optional, Sequence
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -188,6 +191,52 @@ def _cap_batch_tokens(tokens, cap: int = 1024) -> list[str]:
             break
         depth += 1
     return sorted(kept)
+
+
+# The Arrow layout of HEADS_SCHEMA: what every heads file holds.
+_HEADS_ARROW = pa.schema(
+    [
+        ("partition_id", pa.int32()),
+        ("stream_id", pa.string()),
+        ("stream_version", pa.int64()),
+        ("partition_sequence", pa.int64()),
+    ]
+)
+
+# Heads logs of at most this many rows (parquet-footer count, before
+# the fold) reach the append join as a driver-side Arrow relation; larger
+# ones take a Spark scan + groupBy/max. The Arrow relation saves the
+# scan's job on every append, but the driver-side fold and broadcast
+# grow with the log: on a 4-core host an append with a 10k-row log was
+# 0.1-0.2 s faster than the scan, even at 20k-30k rows and 0.05-0.2 s
+# slower at 50k rows.
+_HEADS_ARROW_MAX_ROWS = 20_000
+
+
+def _fold_heads(
+    paths: Sequence[str],
+    extra: "pa.Table | None" = None,
+    drop_streams: Sequence[str] = (),
+) -> pa.Table:
+    """Fold heads files (plus ``extra`` rows) on the driver: latest wins,
+    as the exact integer max of stream_version and partition_sequence per
+    (partition_id, stream_id). ``drop_streams`` removes those streams'
+    rows before the fold (hard delete)."""
+    parts = [pq.read_table(list(paths), schema=_HEADS_ARROW, partitioning=None)]
+    if extra is not None:
+        parts.append(extra)
+    t = pa.concat_tables(parts)
+    if drop_streams:
+        drop = pa.array(list(drop_streams), pa.string())
+        t = t.filter(pc.invert(pc.is_in(t["stream_id"], value_set=drop)))
+    return (
+        t.group_by(["partition_id", "stream_id"])
+        .aggregate([("stream_version", "max"), ("partition_sequence", "max")])
+        .select(
+            ["partition_id", "stream_id", "stream_version_max", "partition_sequence_max"]
+        )
+        .rename_columns(_HEADS_ARROW.names)
+    )
 
 
 def _validate_and_assign(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -673,8 +722,12 @@ class EventStore:
             return self.spark.createDataFrame([], HEADS_SCHEMA).where(
                 F.lit(False)
             )
-        paths = [os.path.join(self.heads_path, p) for p in state.heads_files]
-        return self.spark.read.schema(HEADS_SCHEMA).parquet(*paths)
+        return self.spark.read.schema(HEADS_SCHEMA).parquet(
+            *self._heads_paths(state)
+        )
+
+    def _heads_paths(self, state: _State) -> list[str]:
+        return [os.path.join(self.heads_path, p) for p in state.heads_files]
 
     def watermarks(self, as_of: Optional[int] = None) -> DataFrame:
         """Per-partition confirmed watermark table (SURVEY §4.3) as a
@@ -983,43 +1036,31 @@ class EventStore:
                     # Committed by the racing writer we just lost to,
                     # replaying the same source.
                     return self.spark.createDataFrame([], APPEND_RESULT_SCHEMA)
-            # Driver-side join-strategy pick: heads-log file sizes are
-            # known, so broadcast outright when small (saves the
-            # batch-side shuffle by (pid, stream) — the batch then
-            # shuffles exactly once, for the window/groupBy). Big heads
-            # logs (huge stream cardinality) fall back to a sort-merge
-            # join, which is the right plan there.
-            heads_bytes = 0
-            for rel in state.heads_files:
-                try:
-                    heads_bytes += os.path.getsize(
-                        os.path.join(self.heads_path, rel)
-                    )
-                except OSError:
-                    heads_bytes = 1 << 40
-                    break
-            heads = None
-            if (
-                state.heads_files
-                and 0 < heads_bytes <= self.config.heads_local_fold_bytes
+            # Heads and watermark base come from the same resolved state:
+            # they always reflect ONE commit (and one chain resolution per
+            # attempt). A heads log under the row gate (footer counts, read
+            # before any row data) is folded on the driver into an Arrow
+            # LocalRelation, which saves the scan's Spark job. Larger logs
+            # are scanned and folded by Spark. Either way the session's
+            # autoBroadcastJoinThreshold picks broadcast or sort-merge.
+            paths = self._heads_paths(state)
+            if paths and (
+                sum(pq.read_metadata(p).num_rows for p in paths)
+                <= _HEADS_ARROW_MAX_ROWS
             ):
-                # r12: a small heads log folds DRIVER-side into an
-                # inline LocalRelation — the broadcast build then
-                # collects locally instead of running a scan+aggregate
-                # job per append (a fixed ~0.2-0.3 s tax on every
-                # micro-batch under AQE's eager stage materialization).
-                heads = self._heads_local_fold(state)
-            if heads is None:
+                heads = self.spark.createDataFrame(
+                    _fold_heads(paths)
+                    .select(["partition_id", "stream_id", "stream_version"])
+                    .rename_columns(
+                        ["partition_id", "stream_id", "cur_stream_version"]
+                    )
+                )
+            else:
                 heads = (
-                    # Same resolved state as the watermarks below: heads
-                    # and watermark base always reflect ONE commit (and
-                    # one chain resolution per attempt, not three).
                     self._heads_for_state(state)
                     .groupBy("partition_id", "stream_id")
                     .agg(F.max("stream_version").alias("cur_stream_version"))
                 )
-                if heads_bytes < 64 * 1024 * 1024:
-                    heads = F.broadcast(heads)
             enr = batch.join(heads, ["partition_id", "stream_id"], "left")
             base_seq = (
                 self._wm_col(state.watermarks)
@@ -1070,70 +1111,6 @@ class EventStore:
                 last_err = e
                 continue
         raise last_err  # retries exhausted
-
-    # Driver-side heads folds above this many streams take the Spark
-    # scan path anyway: the inline-VALUES relation is built through the
-    # SQL parser, whose cost grows ~linearly with row count (measured:
-    # ~0.08-0.1 s per 1k rows warm), so past ~1-2k streams the parse
-    # exceeds the ~0.2-0.3 s broadcast-stage job it replaces — the
-    # sustained-ingest tail regressed visibly at 10k streams before
-    # this cap was lowered from 20k.
-    _HEADS_LOCAL_FOLD_MAX_ROWS = 1024
-
-    def _heads_local_fold(self, state: _State) -> "DataFrame | None":
-        """Fold the heads log driver-side into a true LocalRelation of
-        (partition_id, stream_id, cur_stream_version), or None to take
-        the Spark scan path (oversized, unreadable, or exotic ids).
-
-        Exactness: latest-wins per stream is an integer max — identical
-        to the scan path's groupBy/max. stream ids travel as base64
-        inside the VALUES text, so arbitrary id bytes cannot escape the
-        SQL literal; every expression in the VALUES list is foldable,
-        which is what makes ResolveInlineTables emit a LocalRelation
-        (broadcast builds over it collect locally — no job)."""
-        import base64
-
-        try:
-            import pyarrow.parquet as pq
-
-            rows: dict[tuple[int, str], int] = {}
-            for rel in state.heads_files:
-                t = pq.read_table(
-                    os.path.join(self.heads_path, rel),
-                    columns=["partition_id", "stream_id", "stream_version"],
-                )
-                for pid, sid, ver in zip(
-                    t.column(0).to_pylist(),
-                    t.column(1).to_pylist(),
-                    t.column(2).to_pylist(),
-                ):
-                    k = (pid, sid)
-                    if rows.get(k, -1) < ver:
-                        rows[k] = ver
-            if len(rows) > self._HEADS_LOCAL_FOLD_MAX_ROWS:
-                return None
-            if not rows:
-                return self.spark.createDataFrame(
-                    [],
-                    "partition_id int, stream_id string, "
-                    "cur_stream_version long",
-                ).where(F.lit(False))
-            vals = ",".join(
-                "({},CAST(unbase64('{}') AS STRING),{}L)".format(
-                    int(pid),
-                    base64.b64encode(sid.encode("utf-8")).decode("ascii"),
-                    int(ver),
-                )
-                for (pid, sid), ver in rows.items()
-            )
-            return F.broadcast(
-                self.spark.sql(
-                    f"SELECT * FROM (VALUES {vals}) AS "
-                    "heads(partition_id, stream_id, cur_stream_version)"
-                )
-            )
-        except Exception:
-            return None  # any surprise -> the scan path is always sound
 
     @staticmethod
     def _assign_fast(enr: DataFrame, base_seq) -> DataFrame:
@@ -1289,13 +1266,14 @@ class EventStore:
             return
         # One driver-bound aggregation: per-stream heads (for the heads
         # log) — per-partition watermarks are its per-pid maxima.
-        heads_pdf = (
+        heads = (
             accepted.groupBy("partition_id", "stream_id")
             .agg(
                 F.max("stream_version").alias("stream_version"),
                 F.max("partition_sequence").alias("partition_sequence"),
             )
-            .toPandas()
+            .toArrow()
+            .cast(_HEADS_ARROW)
         )
         # Heads-log rollover (W8 for the heads log): every append reads
         # the whole heads log, so fold it into ONE file once enough
@@ -1304,30 +1282,18 @@ class EventStore:
         # what keeps sustained ingest flat between compactions.
         fold = len(state.heads_files) + 1 > self.config.heads_fold_threshold
         if fold:
-            prior = (
-                self.spark.read.schema(HEADS_SCHEMA)
-                .parquet(
-                    *[os.path.join(self.heads_path, p) for p in state.heads_files]
-                )
-                .groupBy("partition_id", "stream_id")
-                .agg(
-                    F.max("stream_version").alias("stream_version"),
-                    F.max("partition_sequence").alias("partition_sequence"),
-                )
-                .toPandas()
-            )
-            heads_pdf = (
-                pd.concat([prior, heads_pdf], ignore_index=True)
-                .groupby(["partition_id", "stream_id"], as_index=False)
-                .max()
-            )
+            heads = _fold_heads(self._heads_paths(state), extra=heads)
         heads_rel = f"heads-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(heads_pdf, os.path.join(self.heads_path, heads_rel))
+        self._write_heads_file(heads, os.path.join(self.heads_path, heads_rel))
         wm = dict(state.watermarks)
-        for pid, seq in (
-            heads_pdf.groupby("partition_id")["partition_sequence"].max().items()
+        per_pid = heads.group_by("partition_id").aggregate(
+            [("partition_sequence", "max")]
+        )
+        for pid, seq in zip(
+            per_pid["partition_id"].to_pylist(),
+            per_pid["partition_sequence_max"].to_pylist(),
         ):
-            wm[int(pid)] = max(int(wm.get(int(pid), -1)), int(seq))
+            wm[pid] = max(wm.get(pid, -1), seq)
         manifest = {
             "commit": state.commit + 1,
             "base": False,
@@ -1341,24 +1307,7 @@ class EventStore:
         self._write_manifest(manifest)
 
     @staticmethod
-    def _write_heads_file(pdf: pd.DataFrame, path: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        table = pa.table(
-            {
-                "partition_id": pa.array(
-                    pdf["partition_id"].astype("int32"), type=pa.int32()
-                ),
-                "stream_id": pa.array(pdf["stream_id"].astype(str), type=pa.string()),
-                "stream_version": pa.array(
-                    pdf["stream_version"].astype("int64"), type=pa.int64()
-                ),
-                "partition_sequence": pa.array(
-                    pdf["partition_sequence"].astype("int64"), type=pa.int64()
-                ),
-            }
-        )
+    def _write_heads_file(table: pa.Table, path: str) -> None:
         tmp = path + f".tmp-{secrets.token_hex(4)}"
         pq.write_table(table, tmp)
         fd = os.open(tmp, os.O_RDONLY)
@@ -1681,17 +1630,11 @@ class EventStore:
                 added.append(rel)
                 i += 1
         shutil.rmtree(staging, ignore_errors=True)
-        heads_pdf = (
-            self.heads()
-            .groupBy("partition_id", "stream_id")
-            .agg(
-                F.max("stream_version").alias("stream_version"),
-                F.max("partition_sequence").alias("partition_sequence"),
-            )
-            .toPandas()
-        )
         heads_rel = f"heads-base-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(heads_pdf, os.path.join(self.heads_path, heads_rel))
+        self._write_heads_file(
+            _fold_heads(self._heads_paths(state)),
+            os.path.join(self.heads_path, heads_rel),
+        )
         self._write_manifest(
             {
                 "commit": state.commit + 1,
@@ -1888,19 +1831,14 @@ class EventStore:
         ]
         events_add = carried + added
 
-        heads = self._heads_for_state(state)
-        if mode == "hard":
-            heads = heads.where(~F.col("stream_id").isin(*targets))
-        heads_pdf = (
-            heads.groupBy("partition_id", "stream_id")
-            .agg(
-                F.max("stream_version").alias("stream_version"),
-                F.max("partition_sequence").alias("partition_sequence"),
-            )
-            .toPandas()
-        )
         heads_rel = f"heads-base-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(heads_pdf, os.path.join(self.heads_path, heads_rel))
+        self._write_heads_file(
+            _fold_heads(
+                self._heads_paths(state),
+                drop_streams=targets if mode == "hard" else (),
+            ),
+            os.path.join(self.heads_path, heads_rel),
+        )
         self._write_manifest(
             {
                 "commit": state.commit + 1,

@@ -217,7 +217,7 @@ def quality_lr_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @pending_guard(_LR_TRAIN_MEMO)
 def _train(spark: SparkSession, sf_dir: str):
-    """Run the GD loop; returns (moments row, weights list, the
+    """Run the GD loop; returns (moments row, weights tuple, the
     standardized feature DataFrame for downstream scoring). Memoized
     per (applicationId, sf_dir): the second consumer in a session
     (classifier then calibration, or either twice) reuses the trained
@@ -320,6 +320,7 @@ def _train(spark: SparkSession, sf_dir: str):
         row = ft.agg(*aggs).head()  # four rounded weights per round
         w = [row[f"w{j}"] for j in range(0, _NF + 1)]
 
+    w = tuple(w)  # immutable: every memo hit hands out this same object
     _LR_TRAIN_MEMO[key] = _LRTrain(mo, w, ft)
     return mo, w, ft
 

@@ -3,6 +3,7 @@ every true near-dup the exact baselines find (VERDICT r2 done-criterion)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sierradb_spark.operators import REGISTRY
@@ -157,6 +158,12 @@ def test_lr_train_memo(spark):
     mo2, w2, ft2 = classifier._train(spark, small)
     assert ft2 is ft1  # memo hit: the pinned checkpoint is reused
     assert w2 == w1 and mo2 == mo1
+    # A caller cannot corrupt the memoized model through the weights it
+    # was handed: they are immutable, and the next hit is unchanged.
+    snapshot = list(w1)
+    with pytest.raises(TypeError):
+        w1[0] = 99.0
+    assert list(classifier._train(spark, small)[1]) == snapshot
     assert (app, small) in classifier._LR_TRAIN_MEMO
 
     invalidate_sf_dir(small)

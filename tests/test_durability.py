@@ -287,17 +287,31 @@ def test_null_expected_version_treated_as_any(spark, store):
 # --- heads-log rollover ------------------------------------------------------
 
 
-def test_heads_log_folds_at_threshold(spark, tmp_path):
+def test_heads_log_folds_at_threshold(spark, tmp_path, heads_fold):
     """Sustained appends must not grow the per-append heads read: once
     heads_fold_threshold files accumulate, a commit folds them into one
-    (heads-log segment rollover), and reads stay correct."""
+    (heads-log segment rollover), and reads stay correct. The folded
+    file equals a Spark groupBy/max over the pre-fold log plus the
+    folding commit's own events."""
     st = EventStore(
         spark,
         str(tmp_path / "fold"),
         EngineConfig(shuffle_partitions=8, heads_fold_threshold=4),
     )
+    folds = 0
     for b in range(7):
-        st.append([AppendRequest(f"hf-{i}", f"E{b}") for i in range(3)])
+        before = st._read_state()
+        st.append([AppendRequest(f"hf-{i}", f"E{b}") for i in range(3 + b)])
+        after = st._read_state()
+        if len(after.heads_files) == 1 and before.heads_files:
+            folds += 1
+            batch = st.changes(before.commit).select(
+                "partition_id", "stream_id", "stream_version", "partition_sequence"
+            )
+            assert heads_fold.written(st) == heads_fold.reference(
+                st._heads_paths(before), extra=batch
+            )
+    assert folds == 1
     state = st._read_state()
     # 7 commits but the log folded at the threshold — never 7 files.
     assert len(state.heads_files) <= 4, state.heads_files

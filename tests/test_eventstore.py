@@ -347,3 +347,45 @@ def test_append_stores_canonical_event_id_both_paths(store, spark):
     # D1's mutated id embeds the wrong hash -> rejected, not stored
     assert not ok["D1"]["accepted"]
     assert [r["event_id"] for r in store.get(eid2).collect()] == [eid2]
+
+
+# Stream ids that would need escaping inside SQL text: quotes, a
+# backslash, multi-byte UTF-8, an emoji, and one at the 64-char limit.
+_HOSTILE_IDS = [
+    "it's",
+    "back\\slash",
+    'say "hi"',
+    "größe-東京",
+    "rocket-🚀",
+    "'\\\"ü🚀" + "x" * 59,
+]
+
+
+@pytest.mark.parametrize("heads", ["arrow", "scan"])
+def test_hostile_stream_ids_resolve_on_both_heads_paths(store, monkeypatch, heads):
+    """Integer expected versions resolve through the heads join whether
+    the heads log reaches it as the driver-side Arrow fold or (row gate
+    at 0) as the Spark scan, and the ids round-trip byte for byte."""
+    from sierradb_spark.eventstore import store as store_module
+
+    assert len(_HOSTILE_IDS[-1]) == store.config.max_stream_id_len
+    if heads == "scan":
+        monkeypatch.setattr(store_module, "_HEADS_ARROW_MAX_ROWS", 0)
+    first = store.append(
+        [AppendRequest(s, "E0", expected_version="empty") for s in _HOSTILE_IDS]
+    )
+    assert [(r.accepted, r.stream_version) for r in first] == [(True, 0)] * 6
+    # Each id twice at expected version 0: the first matches the stored
+    # head, the second is then one behind.
+    res = store.append(
+        [AppendRequest(s, "E1", expected_version="0") for s in _HOSTILE_IDS] * 2
+    )
+    assert [(r.accepted, r.stream_version) for r in res] == [(True, 1)] * 6 + [
+        (False, None)
+    ] * 6
+    for s in _HOSTILE_IDS:
+        assert store.stream_version(s) == 1
+        assert [
+            (r["stream_id"], r["stream_version"], r["event_name"])
+            for r in store.scan(s).collect()
+        ] == [(s, 0, "E0"), (s, 1, "E1")]

@@ -121,6 +121,42 @@ def test_fast_path_single_exchange_single_branch(store, spark):
     assert f["plan"].count("windowspecdefinition") >= 2
 
 
+@pytest.mark.parametrize("heads", ["arrow", "scan"])
+def test_heads_join_strategy_is_the_sessions(store, spark, monkeypatch, heads):
+    """The append path's heads join carries no broadcast hint. Under the
+    row gate the heads log arrives as a driver-side Arrow LocalRelation;
+    above it (gate at 0 here) as a Spark scan + groupBy/max. Either way
+    the session's autoBroadcastJoinThreshold alone decides: broadcast
+    under it, sort-merge with it switched off."""
+    from sierradb_spark.eventstore import store as store_module
+    from sierradb_spark.plans import plan_features
+
+    store.append_df(_mk_reqs(spark, 50, 5))
+    if heads == "scan":
+        monkeypatch.setattr(store_module, "_HEADS_ARROW_MAX_ROWS", 0)
+    joined = []
+    assign = EventStore._assign_fast
+
+    def spy(enr, base_seq):
+        joined.append(enr)
+        return assign(enr, base_seq)
+
+    monkeypatch.setattr(EventStore, "_assign_fast", staticmethod(spy))
+    store.append_df(_mk_reqs(spark, 50, 5))
+    (enr,) = joined
+    assert "ResolvedHint" not in enr._jdf.queryExecution().analyzed().toString()
+    f = plan_features(enr)
+    assert (f["broadcast_hash_joins"], f["sort_merge_joins"]) == (1, 0), f["plan"]
+    assert ("LocalTableScan" in f["plan"]) == (heads == "arrow"), f["plan"]
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        f = plan_features(enr.select("*"))  # a fresh plan under the new conf
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert (f["broadcast_hash_joins"], f["sort_merge_joins"]) == (0, 1), f["plan"]
+
+
 def test_fast_path_matches_row_api_semantics(store, spark):
     """Interleave fast-path DF appends with row-API appends: shared
     version/sequence spaces stay consistent."""

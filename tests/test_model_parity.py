@@ -29,6 +29,7 @@ from sierradb_spark import ids
 from sierradb_spark import versions as V
 from sierradb_spark.config import EngineConfig
 from sierradb_spark.eventstore import AppendRequest, EventStore
+from sierradb_spark.eventstore import store as store_module
 
 N_PARTITIONS = 32
 
@@ -107,6 +108,11 @@ class DatabaseModel:
             for s in sids:
                 self.stream_versions.pop(s, None)
         return n
+
+    def last_sequence(self, stream_id: str) -> int:
+        """Partition sequence of the most recent event appended to the
+        stream's partition."""
+        return self.partition_seqs[self.partition_of(stream_id)] - 1
 
     def read_stream(self, stream_id: str) -> list[ModelEvent]:
         pid = self.partition_of(stream_id)
@@ -202,9 +208,22 @@ _SEEDS = [
 ]
 
 
-@pytest.mark.slow  # r12 slow tier: seeded command-sequence fuzz (~75 s)
-@pytest.mark.parametrize("seed", _SEEDS)
-def test_randomized_command_sequence(spark, tmp_path, seed):
+# Each sequence runs twice: with the append path's heads join fed by the
+# driver-side Arrow fold (the default for small heads logs) and with the
+# row gate at 0, which forces the Spark scan + groupBy/max. Both must
+# match the model, hence each other. The full-length seeds are the slow
+# tier; a short sequence keeps the pair in the fast tier (~20 s each).
+_CASES = [
+    pytest.param(seed, heads, 30, id=f"{seed}-{heads}", marks=pytest.mark.slow)
+    for seed in _SEEDS
+    for heads in ("arrow", "scan")
+] + [pytest.param(3, heads, 10, id=f"short-{heads}") for heads in ("arrow", "scan")]
+
+
+@pytest.mark.parametrize("seed,heads,steps", _CASES)
+def test_randomized_command_sequence(spark, tmp_path, monkeypatch, seed, heads, steps):
+    if heads == "scan":
+        monkeypatch.setattr(store_module, "_HEADS_ARROW_MAX_ROWS", 0)
     rng = random.Random(seed)
     model = DatabaseModel()
     store = EventStore(
@@ -288,7 +307,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
         return (row["n"], row["h"])
 
     n_appends = 0
-    for step in range(30):
+    for step in range(steps):
         roll = rng.random()
         if roll < 0.05:  # delete streams (hard or scrub) vs model
             sids = rng.sample(STREAMS, rng.randrange(1, 3))
@@ -348,7 +367,9 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
             expected_results = []
             for r in reqs:
                 ok, vers = model.append_txn([r])
-                expected_results.append((ok, vers[0] if ok else None))
+                expected_results.append(
+                    (ok, vers[0] if ok else None, model.last_sequence(r[0]) if ok else None)
+                )
             prev_head = store._read_state().commit
             res = store.append(
                 [
@@ -356,7 +377,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                     for (s, n, e, p) in reqs
                 ]
             )
-            got = [(r.accepted, r.stream_version) for r in res]
+            got = [(r.accepted, r.stream_version, r.partition_sequence) for r in res]
             assert got == expected_results, f"append diverged at step {step} (seed {seed})"
             record_commit(
                 prev_head,
@@ -396,6 +417,10 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
             assert all(r.accepted for r in res) == ok, f"txn diverged step {step} (seed {seed})"
             if ok:
                 assert [r.stream_version for r in res] == vers
+                last = model.last_sequence(s)
+                assert [r.partition_sequence for r in res] == list(
+                    range(last - len(res) + 1, last + 1)
+                ), f"txn sequences diverged step {step} (seed {seed})"
         elif roll < 0.82:  # read checks
             check_stream(rng.choice(STREAMS))
         elif roll < 0.86:
@@ -453,7 +478,9 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
             expected_results = []
             for s, n, e in reqs:
                 ok, vers = model.append_txn([(s, n, e, b"")])
-                expected_results.append((ok, vers[0] if ok else None))
+                expected_results.append(
+                    (ok, vers[0] if ok else None, model.last_sequence(s) if ok else None)
+                )
             token = f"fuzz-{seed}-{step}"
             prev_head = store._read_state().commit
             # Half the tokened appends also exercise the dead-letter
@@ -490,7 +517,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                 ],
             )
             got = [
-                (r["accepted"], r["stream_version"])
+                (r["accepted"], r["stream_version"], r["partition_sequence"])
                 for r in res.orderBy("arrival").collect()
             ]
             assert got == expected_results, f"tokened append diverged step {step}"
@@ -501,7 +528,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                     f"hook ran after commit at step {step}"
                 )
                 want_dead = sorted(
-                    s for (s, _n, _e), (ok, _v) in zip(reqs, expected_results)
+                    s for (s, _n, _e), (ok, *_) in zip(reqs, expected_results)
                     if not ok
                 )
                 got_dead = (
@@ -524,7 +551,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
             assert token in store._read_state().batch_tokens, (
                 f"token not committed at step {step}"
             )
-            if not any(ok for ok, _ in expected_results):
+            if not any(ok for ok, *_ in expected_results):
                 # the all-rejected empty commit advances the chain but
                 # records no change-feed delta (record_commit above got
                 # an empty accepted list — nothing to record)
@@ -536,7 +563,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                 )
                 want_dead = sorted(
                     s
-                    for (s, _n, _e), (ok2, _v) in zip(reqs, expected_results)
+                    for (s, _n, _e), (ok2, *_) in zip(reqs, expected_results)
                     if not ok2
                 )
                 if want_dead:

@@ -45,7 +45,7 @@ def _seed(store, n_streams=6, per=4, marker=b"SECRET-PAYLOAD-MARKER"):
         )
 
 
-def test_hard_delete_removes_stream_everywhere(store):
+def test_hard_delete_removes_stream_everywhere(store, heads_fold):
     _seed(store)
     before = store.events()
     kept_before = {
@@ -53,8 +53,12 @@ def test_hard_delete_removes_stream_everywhere(store):
         for r in before.where(F.col("stream_id") != "del-0").collect()
     }
     total_before = before.count()
+    want_heads = heads_fold.reference(
+        store._heads_paths(store._read_state()), drop=["del-0"]
+    )
 
     stats = store.delete_streams(["del-0"], mode="hard")
+    assert heads_fold.written(store) == want_heads
     assert stats["events_affected"] == 4
     assert stats["partitions_rewritten"] >= 1
 
@@ -79,16 +83,19 @@ def test_hard_delete_then_reappend_restarts_at_zero(store):
     assert res[0].accepted and res[0].stream_version == 0
 
 
-def test_scrub_blanks_payloads_keeps_positions(store):
+def test_scrub_blanks_payloads_keeps_positions(store, heads_fold):
     _seed(store)
     before = {
         r["event_id"]: (r["partition_sequence"], r["stream_version"])
         for r in store.events().where(F.col("stream_id") == "del-0").collect()
     }
     total = store.events().count()
+    # scrub keeps every head, the scrubbed stream's included
+    want_heads = heads_fold.reference(store._heads_paths(store._read_state()))
 
     stats = store.delete_streams(["del-0"], mode="scrub")
     assert stats["events_affected"] == 4
+    assert heads_fold.written(store) == want_heads
 
     after = store.events()
     assert after.count() == total  # nothing removed

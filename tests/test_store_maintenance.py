@@ -32,13 +32,15 @@ def test_scan_batches_pagination(store):
     assert flat == list(range(14, 3, -1))
 
 
-def test_compact_preserves_contents_and_shrinks_files(store):
+def test_compact_preserves_contents_and_shrinks_files(store, heads_fold):
     # 6 appends → ≥6 files per touched partition
     for b in range(6):
-        store.append([AppendRequest(f"c-{i}", f"E{b}") for i in range(4)])
+        store.append([AppendRequest(f"c-{i}", f"E{b}") for i in range(4 + b)])
     before = store.events().orderBy("partition_id", "partition_sequence").collect()
     n_files_before = len(glob.glob(store.events_path + "/**/*.parquet", recursive=True))
+    want_heads = heads_fold.reference(store._heads_paths(store._read_state()))
     store.compact()
+    assert heads_fold.written(store) == want_heads
     after = store.events().orderBy("partition_id", "partition_sequence").collect()
     n_files_after = len(glob.glob(store.events_path + "/**/*.parquet", recursive=True))
     assert [tuple(r) for r in after] == [tuple(r) for r in before]
